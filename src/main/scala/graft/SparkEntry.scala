@@ -746,7 +746,7 @@ object SparkEntry {
     }),
     "html_anchor_text" -> ((s, dir) => {
       // anchor-text extraction: the same edge walk as html_links, each
-      // edge keyed to its element's inner text — pins every innerText
+      // edge keyed to its element's inner text — pins every InnerText
       // convention on closed forms (mid-word entity, transparent inline
       // tag, <br> separator, comment skip, whitespace collapse, image-only
       // empty anchor, HTML5 nested-<a> auto-close, javascript:-text and

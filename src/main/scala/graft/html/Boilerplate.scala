@@ -22,8 +22,8 @@ final case class HtmlResult(
     blocks: Int,
     contentBlocks: Int)
 
-/** Main-content extraction for HTML pages: a hand-written tag scanner (no
-  * DOM library — zero-dependency, allocation-light for 10^12-row scans)
+/** Main-content extraction for HTML pages: the hand-written [[Tokenizer]]
+  * (no DOM library — zero-dependency, allocation-light for 10^12-row scans)
   * feeding a shallow-text-features block classifier.
   *
   * The classifier is the public NumWordsRules decision stump from
@@ -145,27 +145,28 @@ object Boilerplate {
     }
   }
 
-  /** Single forward pass: tags, comments, CDATA, entities → blocks.
+  /** Single forward pass over the [[Tokenizer]]'s tokens → blocks.
     * The <title> block is emitted with headingLevel = -1. Package-visible
     * so [[Outline]] can read heading structure off the SAME scan the
     * extractor uses (one scanner, no drift). */
-  private[html] def scan(html: String): Seq[Block] = {
-    val blocks = mutable.ArrayBuffer.empty[Block]
-    val text = new StringBuilder
-    var words = 0
-    var linkedWords = 0
-    var blockStart = -1
-    var headingLevel = 0
-    var chromeDepth = 0
-    var anchorDepth = 0
-    var inTitle = false
-    var skipTag: String = null // inside <script>/<style>/…
-    var pendingSpace = false
-    var inWord = false
-    var listItem = false
-    var pendingCellSep = false // " | " owed before the NEXT cell's first char
+  private[html] def scan(html: String): Seq[Block] = new BlockScan(html).run()
 
-    def endWord(): Unit = {
+  private final class BlockScan(html: String) extends CharSink {
+    private val blocks = mutable.ArrayBuffer.empty[Block]
+    private val text = new StringBuilder
+    private var words = 0
+    private var linkedWords = 0
+    private var blockStart = -1
+    private var headingLevel = 0
+    private var chromeDepth = 0
+    private var anchorDepth = 0
+    private var inTitle = false
+    private var pendingSpace = false
+    private var inWord = false
+    private var listItem = false
+    private var pendingCellSep = false // " | " owed before the NEXT cell's first char
+
+    private def endWord(): Unit = {
       if (inWord) {
         words += 1
         if (anchorDepth > 0) linkedWords += 1
@@ -173,7 +174,7 @@ object Boilerplate {
       }
     }
 
-    def flushBlock(): Unit = {
+    private def flushBlock(): Unit = {
       endWord()
       // trim trailing space
       while (text.nonEmpty && text.charAt(text.length - 1) == ' ') text.setLength(text.length - 1)
@@ -195,7 +196,7 @@ object Boilerplate {
       pendingCellSep = false
     }
 
-    def appendChar(c: Char, at: Int): Unit = {
+    def char(c: Char, at: Int): Unit = {
       if (c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\u00a0' || c == '\f') {
         if (text.nonEmpty) pendingSpace = true
         endWord()
@@ -210,53 +211,22 @@ object Boilerplate {
       }
     }
 
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (i + 3 < n && html.charAt(i + 1) == '!' && html.charAt(i + 2) == '-' && html.charAt(i + 3) == '-') {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else if (i + 8 < n && html.regionMatches(true, i + 1, "![CDATA[", 0, 8)) {
-          val end = html.indexOf("]]>", i + 9)
-          i = if (end < 0) n else end + 3
-        } else if (i + 1 < n && (html.charAt(i + 1) == '!' || html.charAt(i + 1) == '?')) {
-          val end = html.indexOf('>', i + 1)
-          i = if (end < 0) n else end + 1
-        } else {
-          val closing = i + 1 < n && html.charAt(i + 1) == '/'
-          var j = i + (if (closing) 2 else 1)
-          val nameStart = j
-          while (j < n && (html.charAt(j).isLetterOrDigit)) j += 1
-          val name = html.substring(nameStart, j).toLowerCase
-          // quote-aware tag end: '>' inside a quoted attribute value
-          // (href="a>b") must not terminate the tag
-          var end = -1
-          var k = j
-          var quote: Char = 0
-          while (end < 0 && k < n) {
-            val ck = html.charAt(k)
-            if (quote != 0) { if (ck == quote) quote = 0 }
-            else if (ck == '"' || ck == '\'') quote = ck
-            else if (ck == '>') end = k
-            k += 1
-          }
-          val tagEnd = if (end < 0) n else end + 1
-          val selfClosed = end > 0 && html.charAt(end - 1) == '/'
-
+    def run(): Seq[Block] = {
+      val t = new Tokenizer(html)
+      var skipTag: String = null // inside <script>/<style>/… until its end tag
+      while (t.next()) {
+        if (t.kind == Tokenizer.Text) {
+          if (skipTag == null) Entities.decodeTo(html, t.from, t.until, this)
+        } else if (t.kind != Tokenizer.RawText) {
+          val name = t.name
+          val closing = t.kind == Tokenizer.EndTag
           if (skipTag != null) {
             if (closing && name == skipTag) skipTag = null
-            i = tagEnd
-          } else if (name.isEmpty) {
-            // stray '<' — treat as text
-            appendChar('<', i)
-            i += 1
           } else {
-            if (!closing && SkipContentTags.contains(name) && !selfClosed) skipTag = name
+            if (!closing && SkipContentTags.contains(name) && !t.selfClosing) skipTag = name
             else if (name == "a") {
               endWord() // a word ends at the anchor boundary so it counts as linked
-              if (closing) anchorDepth = math.max(0, anchorDepth - 1) else if (!selfClosed) anchorDepth += 1
+              if (closing) anchorDepth = math.max(0, anchorDepth - 1) else if (!t.selfClosing) anchorDepth += 1
             } else if (name == "br") {
               pendingSpace = true
               endWord()
@@ -275,59 +245,18 @@ object Boilerplate {
               if (name == "title") inTitle = !closing
               if (ChromeTags.contains(name)) {
                 if (closing) chromeDepth = math.max(0, chromeDepth - 1)
-                else if (!selfClosed) chromeDepth += 1
+                else if (!t.selfClosing) chromeDepth += 1
               }
               headingLevel =
                 if (!closing && name.length == 2 && name.charAt(0) == 'h' && name.charAt(1).isDigit)
                   name.charAt(1) - '0'
                 else 0
             }
-            i = tagEnd
           }
         }
-      } else if (c == '&' && skipTag == null) {
-        val (decoded, extra, next) = entity(html, i)
-        appendChar(decoded, i)
-        if (extra != 0) appendChar(extra, i) // low surrogate of an astral codepoint
-        i = next
-      } else {
-        if (skipTag == null) appendChar(c, i)
-        i += 1
       }
-    }
-    flushBlock()
-    blocks.toSeq
-  }
-
-  /** Entity decoder: the full HTML 4.01 named table ([[Entities]], 252
-    * names + apos) plus numeric references (decimal/hex, incl. astral
-    * codepoints as surrogate pairs). Returns (char, extraChar-or-0,
-    * nextIndex); an unrecognized body falls back to a literal '&'. */
-  // longest body we ever accept: the longest named entity or a numeric
-  // reference like #x10ffff (8 chars) — derived from the table, not a magic
-  // number, so a longer entity added there is automatically scanned
-  private val MaxEntityBody = math.max(Entities.maxNameLength, 8)
-
-  /** Decode the entity starting at `html(i) == '&'`: (char, optional low
-    * surrogate, next index). Shared with the head-metadata scanner. */
-  private[html] def entity(html: String, i: Int): (Char, Char, Int) = {
-    val semi = html.indexOf(';', i + 1)
-    if (semi < 0 || semi - i - 1 > MaxEntityBody) return ('&', 0, i + 1)
-    val body = html.substring(i + 1, semi)
-    Entities.table.get(body) match {
-      case Some(c) => (c, 0, semi + 1)
-      case None =>
-        val cp =
-          try {
-            if (body.startsWith("#x") || body.startsWith("#X")) Integer.parseInt(body.substring(2), 16)
-            else if (body.startsWith("#")) Integer.parseInt(body.substring(1))
-            else return ('&', 0, i + 1)
-          } catch { case _: Exception => return ('&', 0, i + 1) }
-        if (cp < 0 || cp > 0x10ffff) return ('&', 0, i + 1)
-        if (cp > 0xffff) {
-          val pair = Character.toChars(cp)
-          (pair(0), pair(1), semi + 1)
-        } else (cp.toChar, 0, semi + 1)
+      flushBlock()
+      blocks.toSeq
     }
   }
 }

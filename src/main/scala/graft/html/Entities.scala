@@ -83,7 +83,88 @@ object Entities {
     b.result()
   }
 
+  /** The five XML predefined entities: the table sitemaps and feeds
+    * decode against. */
+  val xml: Map[String, Char] =
+    Map("amp" -> '&', "lt" -> '<', "gt" -> '>', "quot" -> '"', "apos" -> '\'')
+
   /** Longest entity name ("CounterClockwise..." doesn't exist in HTML4 —
     * the max here is 8, e.g. `thetasym`). */
   val maxNameLength: Int = table.keysIterator.map(_.length).max
+
+  // longest body ever accepted between '&' and ';': the longest named entity
+  // or a numeric reference like #x10ffff (8 chars) — derived from the table,
+  // so a longer entity added there is automatically scanned
+  private val MaxBody = math.max(maxNameLength, 8)
+
+  /** THE character-reference decoder: the reference starting at
+    * `s(i) == '&'`, named (looked up in `names`) or numeric (decimal or
+    * hex, ASCII digits, at most U+10FFFF). The `;` is searched for no
+    * further than `MaxBody` chars and never at or past `until`, so a bare
+    * `&` costs O(1) however long the rest of the page. Returns the code
+    * point in the low 32 bits and the index after the reference in the
+    * high 32 bits; an unrecognized reference decodes to a literal `&`. */
+  private def reference(s: String, i: Int, until: Int, names: Map[String, Char]): Long = {
+    val limit = math.min(until, i + 2 + MaxBody)
+    var semi = i + 1
+    while (semi < limit && s.charAt(semi) != ';') semi += 1
+    val cp =
+      if (semi >= limit) -1
+      else if (s.charAt(i + 1) == '#') numeric(s, i + 2, semi)
+      else names.get(s.substring(i + 1, semi)).fold(-1)(_.toInt)
+    if (cp < 0 || cp > 0x10ffff) (i + 1).toLong << 32 | '&'
+    else (semi + 1).toLong << 32 | cp
+  }
+
+  private def numeric(s: String, from: Int, until: Int): Int = {
+    val hex = from < until && (s.charAt(from) == 'x' || s.charAt(from) == 'X')
+    val radix = if (hex) 16 else 10
+    val digits = s.substring(if (hex) from + 1 else from, until)
+    if (digits.isEmpty || digits.length > 7 || digits.exists(c => c > 'f' || Character.digit(c, radix) < 0)) -1
+    else Integer.parseInt(digits, radix)
+  }
+
+  /** `s` with every character reference decoded against `names`. */
+  def decode(s: String, names: Map[String, Char] = table): String = {
+    var amp = s.indexOf('&')
+    if (amp < 0) return s
+    val sb = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (amp >= 0) {
+      sb.append(s, i, amp)
+      val r = reference(s, amp, s.length, names)
+      sb.appendCodePoint(r.toInt)
+      i = (r >>> 32).toInt
+      amp = s.indexOf('&', i)
+    }
+    sb.append(s, i, s.length).toString
+  }
+
+  /** Streams `s[from, until)` into `sink` with HTML references decoded:
+    * each char with the source index it came from (a reference's chars
+    * carry the index of its `&`; an astral code point arrives as its
+    * surrogate pair). */
+  private[html] def decodeTo(s: String, from: Int, until: Int, sink: CharSink): Unit = {
+    var i = from
+    while (i < until) {
+      val c = s.charAt(i)
+      if (c == '&') {
+        val r = reference(s, i, until, table)
+        val cp = r.toInt
+        if (cp > 0xffff) {
+          sink.char(Character.highSurrogate(cp), i)
+          sink.char(Character.lowSurrogate(cp), i)
+        } else sink.char(cp.toChar, i)
+        i = (r >>> 32).toInt
+      } else {
+        sink.char(c, i)
+        i += 1
+      }
+    }
+  }
+}
+
+/** Receiver of decoded text, one char at a time with its source index. */
+private[html] trait CharSink {
+  def char(c: Char, at: Int): Unit
 }

@@ -4,11 +4,8 @@ package graft.html
   * into URL frontiers and link-based quality priors (Common-Crawl publishes
   * exactly this as its host/domain graph; harmonic-centrality and PageRank
   * ranks derived from it are standard crawl-filtering signals). ADDITIVE
-  * surface — the reference has no HTML code.
-  *
-  * Shares [[Meta]]'s hardened scanner rules: comments/CDATA skipped,
-  * raw-text/RCDATA bodies skipped with case-insensitive close, every tag's
-  * attributes consumed quote-aware, entities decoded in attribute values. */
+  * surface — the reference has no HTML code. Tags come from the
+  * [[Tokenizer]]. */
 object Links {
 
   /** `<a href>` targets in document order, resolved to absolute URLs.
@@ -37,106 +34,56 @@ object Links {
     *
     * Href rules are [[extract]]'s (first-wins `<base>` resolved after the
     * walk, http(s) whitelist, fragments dropped). Anchor text is the
-    * element's inner text via [[innerText]]. HTML5 forbids nested `<a>` —
-    * browsers auto-close the open anchor when the next one opens, and this
-    * scanner replicates that; an anchor still open at EOF runs to the end
-    * of the document (spec: it would run to the implied `</body>`); an
-    * href-less `<a name=…>` is a named target, not a link, so its text is
-    * no edge's anchor. */
+    * element's [[InnerText]], collected during the same walk. HTML5 forbids
+    * nested `<a>` — browsers auto-close the open anchor when the next one
+    * opens, and this walk replicates that; an anchor still open at EOF
+    * runs to the end of the document (spec: it would run to the implied
+    * `</body>`); an href-less `<a name=…>` is a named target, not a link,
+    * so its text is no edge's anchor. */
   def extractAnchors(html: String, pageUrl: String): Seq[(String, String)] =
     walkAnchors(html, pageUrl, withText = true)
 
   /** One walk body for [[extract]] and [[extractAnchors]] (the two cannot
-    * drift), parameterized on whether anchor inner text is materialized —
-    * href-only extraction must not pay a second scan + entity decode of
-    * every anchor body just to throw the string away. */
+    * drift), parameterized on whether anchor inner text is collected —
+    * href-only extraction must not pay for decoding every anchor body just
+    * to throw the string away. */
   private def walkAnchors(html: String, pageUrl: String,
       withText: Boolean): Seq[(String, String)] = {
     var baseHref: String = null
     val raw = Vector.newBuilder[(String, String)]
     var openHref: String = null
-    var textStart = 0
-    def closeAt(pos: Int): Unit =
+    var text: InnerText = null
+    def close(): Unit =
       if (openHref != null) {
-        raw += ((openHref, if (withText) innerText(html, textStart, pos) else ""))
+        raw += ((openHref, if (text == null) "" else text.toString))
         openHref = null
+        text = null
       }
-    Meta.walkTagsAt(html) { (name, a, tagStart, afterTag) =>
-      name match {
-        case "a" =>
-          closeAt(tagStart) // HTML5 auto-close: a new <a> ends the open one
-          a.get("href").foreach { h => openHref = h; textStart = afterTag }
-        case "/a"   => closeAt(tagStart)
-        case "base" => if (baseHref == null) a.get("href").foreach(h => baseHref = h)
-        case _      =>
-      }
+    val t = new Tokenizer(html)
+    while (t.next()) t.kind match {
+      case Tokenizer.Text => if (text != null) Entities.decodeTo(html, t.from, t.until, text)
+      case Tokenizer.StartTag | Tokenizer.EndTag =>
+        t.name match {
+          case "a" =>
+            close() // HTML5 auto-close: a new <a> ends the open one
+            if (t.kind == Tokenizer.StartTag) t.attrs.get("href").foreach { h =>
+              openHref = h
+              if (withText) text = new InnerText
+            }
+          case "br" => if (text != null) text.break()
+          case "base" =>
+            if (t.kind == Tokenizer.StartTag && baseHref == null) t.attrs.get("href").foreach(h => baseHref = h)
+          case _ =>
+        }
+      case _ =>
     }
-    closeAt(html.length)
+    close()
     val base = if (baseHref == null) pageUrl else resolve(pageUrl, baseHref)
-    raw.result().flatMap { case (h, t) => resolveLink(base, h).map(u => (u, t)) }
+    raw.result().flatMap { case (h, a) => resolveLink(base, h).map(u => (u, a)) }
   }
 
   def extractAnchors(bytes: Array[Byte], pageUrl: String): Seq[(String, String)] =
     extractAnchors(Boilerplate.decode(bytes), pageUrl)
-
-  /** Text content of `html[from, until)`: tags dropped with the shared
-    * quote-aware attribute scan (a `>` inside `href="a>b"` cannot truncate
-    * the tag), comments/CDATA and raw-text bodies (`script`/`style`/
-    * `title`/`textarea`) skipped, character references decoded, whitespace
-    * collapsed to single spaces and trimmed. `<br>` separates words; other
-    * tags are transparent (`bo<b>ld</b>` → `bold`) — the same inline-tag
-    * convention as [[Boilerplate]]'s block scanner. */
-  private[html] def innerText(html: String, from: Int, until: Int): String = {
-    val sb = new java.lang.StringBuilder(32)
-    var pendingSpace = false
-    def append(c: Char): Unit =
-      if (c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == '\u00a0') {
-        if (sb.length > 0) pendingSpace = true
-      } else {
-        if (pendingSpace) { sb.append(' '); pendingSpace = false }
-        sb.append(c)
-      }
-    var i = math.max(from, 0)
-    val end = math.min(until, html.length)
-    while (i < end) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val close = html.indexOf("-->", i + 4)
-          i = if (close < 0) end else close + 3
-        } else if (html.startsWith("<![CDATA[", i)) {
-          val close = html.indexOf("]]>", i + 9)
-          i = if (close < 0) end else close + 3
-        } else {
-          val (name, attrEnd) = Meta.tagName(html, i + 1)
-          if (name.isEmpty) { append('<'); i += 1 } // stray '<' is text
-          else {
-            val (_, next) = Meta.attrs(html, attrEnd)
-            // tagName keeps a trailing '/' in the name, so XHTML-style
-            // self-closing <br/> arrives as "br/" — strip it or the
-            // ubiquitous no-space form glues words ("one<br/>two")
-            if (name.stripSuffix("/") == "br" && sb.length > 0) pendingSpace = true
-            name match {
-              case "script" | "style" | "title" | "textarea" =>
-                val close = Meta.indexOfIgnoreCase(html, "</" + name, next)
-                // consume through the close tag's '>' — walkTags can leave
-                // its trailing '>' to the '<'-only outer loop, but here a
-                // leftover '>' would be appended as anchor text
-                i = if (close < 0) end
-                    else Meta.attrs(html, close + 2 + name.length)._2
-              case _ => i = next
-            }
-          }
-        }
-      } else if (c == '&') {
-        val (ch, lo, next) = Boilerplate.entity(html, i)
-        append(ch)
-        if (lo != 0) sb.append(lo) // low surrogate rides with its pair
-        i = next
-      } else { append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   /** Index of the ':' ending a valid RFC 3986 scheme prefix
     * (ASCII `ALPHA *( ALPHA / DIGIT / "+" / "-" / "." ) ":"`), or -1 when
@@ -229,4 +176,26 @@ object Links {
     val joined = out.mkString("/")
     if (dir && joined.nonEmpty) "/" + joined + "/" else "/" + joined
   }
+}
+
+/** Text content of an element as its [[Tokenizer.Text]] tokens stream past
+  * (the walk feeds it; raw-text bodies never reach it): character
+  * references decoded, whitespace collapsed to single spaces and trimmed,
+  * other tags transparent (`bo<b>ld</b>` → `bold`) and `<br>` a word
+  * break — the same inline-tag convention as [[Boilerplate]]'s blocks. */
+private[html] final class InnerText extends CharSink {
+  private val sb = new java.lang.StringBuilder(32)
+  private var pendingSpace = false
+
+  def char(c: Char, at: Int): Unit =
+    if (c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == '\u00a0') {
+      if (sb.length > 0) pendingSpace = true
+    } else {
+      if (pendingSpace) { sb.append(' '); pendingSpace = false }
+      sb.append(c)
+    }
+
+  def break(): Unit = if (sb.length > 0) pendingSpace = true
+
+  override def toString: String = sb.toString
 }

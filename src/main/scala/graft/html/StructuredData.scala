@@ -13,25 +13,23 @@ package graft.html
   * schema-driven) rather than a hand-rolled JSON parser. Script bodies are
   * raw text per HTML5 (no entity decoding, no tag parsing inside), and the
   * type attribute is matched case-insensitively with optional parameters
-  * (`application/ld+json; charset=utf-8`). Blocks inside comments/CDATA
-  * can't surface ([[Meta.walkTagsAt]] skips them); a `</script` inside a
-  * JSON string ends the block exactly as a browser would (the HTML5
-  * script-data state has no escape for it — pages that need it write
-  * `<\/script`). */
+  * (`application/ld+json; charset=utf-8`). The body is the [[Tokenizer]]'s
+  * raw-text token, so blocks inside comments/CDATA can't surface and a
+  * `</script` inside a JSON string ends the block exactly as a browser
+  * would (the HTML5 script-data state has no escape for it — pages that
+  * need it write `<\/script`). */
 object StructuredData {
 
   /** Raw, trimmed JSON-LD block bodies in document order; empty blocks
     * skipped. */
   def jsonLd(html: String): Seq[String] = {
     val out = Vector.newBuilder[String]
-    Meta.walkTagsAt(html) { (name, attrs, _, afterTag) =>
-      if (name == "script" && attrs.get("type").exists(isJsonLd)) {
-        // walkTagsAt skips the raw-text body internally; slice it here
-        val close = Meta.indexOfIgnoreCase(html, "</script", afterTag)
-        val body = html.substring(afterTag, if (close < 0) html.length else close).trim
+    val t = new Tokenizer(html)
+    while (t.next())
+      if (t.kind == Tokenizer.RawText && t.name == "script" && t.attrs.get("type").exists(isJsonLd)) {
+        val body = html.substring(t.from, t.until).trim
         if (body.nonEmpty) out += body
       }
-    }
     out.result()
   }
 

@@ -25,11 +25,10 @@ import scala.collection.mutable
   *    `text == ""`;
   *  - `<caption>`, `<thead>`/`<tbody>`/`<tfoot>` and inter-cell whitespace
   *    are transparent — caption text is not a cell;
-  *  - cell text uses [[Links.innerText]]: inline tags transparent, `<br>`
-  *    separates words, entities decoded, comments/CDATA/raw-text bodies
-  *    skipped — and the walk itself is [[Meta.walkTagsAt]], so a `<td>`
-  *    forged inside `<script>` or a comment can neither open a cell nor
-  *    leak text.
+  *  - cell text is the cell's [[InnerText]] (inline tags transparent,
+  *    `<br>` separates words, entities decoded), collected from the one
+  *    [[Tokenizer]] walk — so a `<td>` forged inside `<script>` or a
+  *    comment can neither open a cell nor leak text.
   *
   * A per-row projection: ZERO shuffles at any corpus size. */
 object Tables {
@@ -42,12 +41,11 @@ object Tables {
     * table's cells close before their containing cell) — callers wanting
     * document layout sort by (tableIdx, rowIdx, colIdx). */
   def cells(html: String): Seq[TableCell] = {
-    // one open cell per table on the stack at most; text accumulates as raw
-    // [from, until) segments so a nested table can pause/resume the
-    // containing cell without a second scanner
+    // one open cell per table on the stack at most; text goes to the open
+    // cell of the innermost table, so a nested table pauses the containing
+    // cell and its close resumes it
     final class OpenCell(val row: Int, val col: Int, val header: Boolean) {
-      val segs = mutable.ArrayBuffer.empty[(Int, Int)]
-      var segStart: Int = -1 // -1 = paused (inside a nested table)
+      val text = new InnerText
     }
     final class Tbl(val idx: Int) {
       var row: Int = -1
@@ -58,72 +56,62 @@ object Tables {
     val stack = mutable.ArrayBuffer.empty[Tbl]
     var nTables = 0
     def top: Tbl = stack(stack.length - 1)
-    def endSeg(t: Tbl, pos: Int): Unit = {
-      val c = t.cell
-      if (c != null && c.segStart >= 0) {
-        if (pos > c.segStart) c.segs += ((c.segStart, pos))
-        c.segStart = -1
-      }
-    }
-    def closeCell(t: Tbl, pos: Int): Unit = {
+    def closeCell(t: Tbl): Unit = {
       val c = t.cell
       if (c != null) {
-        endSeg(t, pos)
-        val text = c.segs.iterator
-          .map { case (a, b) => Links.innerText(html, a, b) }
-          .filter(_.nonEmpty).mkString(" ")
-        out += TableCell(t.idx, c.row, c.col, c.header, text)
+        out += TableCell(t.idx, c.row, c.col, c.header, c.text.toString)
         t.cell = null
       }
     }
-    Meta.walkTagsAt(html) { (name0, _, tagStart, afterTag) =>
-      // tagName keeps an XHTML self-close slash in the name ("td/") — fold
-      // it onto the open form: HTML5 tree construction IGNORES the
-      // self-closing slash on non-void elements, so <td/> opens a cell
-      // that runs to the next boundary, exactly like <td>
-      val name = name0.stripSuffix("/")
-      name match {
-        case "table" =>
-          if (stack.nonEmpty) endSeg(top, tagStart) // containing cell pauses
-          stack += new Tbl(nTables)
-          nTables += 1
-        case "/table" =>
-          if (stack.nonEmpty) {
-            closeCell(top, tagStart)
-            stack.remove(stack.length - 1)
-            // containing cell resumes after the inner table's close tag
-            if (stack.nonEmpty) {
-              val c = top.cell
-              if (c != null && c.segStart < 0) c.segStart = afterTag
-            }
+    val tok = new Tokenizer(html)
+    while (tok.next()) {
+      val open = if (stack.isEmpty) null else top.cell
+      tok.kind match {
+        case Tokenizer.Text => if (open != null) Entities.decodeTo(html, tok.from, tok.until, open.text)
+        case Tokenizer.StartTag | Tokenizer.EndTag =>
+          // HTML5 tree construction IGNORES the self-closing slash on
+          // non-void elements: <td/> opens a cell that runs to the next
+          // boundary, exactly like <td>
+          val closing = tok.kind == Tokenizer.EndTag
+          tok.name match {
+            case "table" if !closing =>
+              // the containing cell pauses: the inner table's text is not its text
+              if (open != null) open.text.break()
+              stack += new Tbl(nTables)
+              nTables += 1
+            case "table" =>
+              if (stack.nonEmpty) {
+                closeCell(top)
+                stack.remove(stack.length - 1)
+                // containing cell resumes after the inner table's close tag
+                if (stack.nonEmpty && top.cell != null) top.cell.text.break()
+              }
+            case "tr" if !closing =>
+              if (stack.nonEmpty) {
+                val t = top
+                closeCell(t)
+                t.row += 1
+                t.col = -1
+              }
+            case "td" | "th" if !closing =>
+              if (stack.nonEmpty) {
+                val t = top
+                closeCell(t) // implied close of the previous cell
+                if (t.row < 0) t.row = 0 // implied <tr>
+                t.col += 1
+                t.cell = new OpenCell(t.row, t.col, tok.name == "th")
+              }
+            case "tr" | "td" | "th" =>
+              if (stack.nonEmpty) closeCell(top)
+            case "br" => if (open != null) open.text.break()
+            case _ => // thead/tbody/tfoot/caption and everything else: transparent
           }
-        case "tr" =>
-          if (stack.nonEmpty) {
-            val t = top
-            closeCell(t, tagStart)
-            t.row += 1
-            t.col = -1
-          }
-        case "/tr" =>
-          if (stack.nonEmpty) closeCell(top, tagStart)
-        case "td" | "th" =>
-          if (stack.nonEmpty) {
-            val t = top
-            closeCell(t, tagStart) // implied close of the previous cell
-            if (t.row < 0) t.row = 0 // implied <tr>
-            t.col += 1
-            val c = new OpenCell(t.row, t.col, name == "th")
-            c.segStart = afterTag
-            t.cell = c
-          }
-        case "/td" | "/th" =>
-          if (stack.nonEmpty) closeCell(top, tagStart)
-        case _ => // thead/tbody/tfoot/caption and everything else: transparent
+        case _ =>
       }
     }
     // EOF closes anything still open (truncated / unclosed markup)
     while (stack.nonEmpty) {
-      closeCell(top, html.length)
+      closeCell(top)
       stack.remove(stack.length - 1)
     }
     out.result()

@@ -1532,7 +1532,7 @@ object Corpus {
 
   /** Anchor-text probe (the `html_anchor_text` / `anchor_profile` gates):
     * five kept edges per doc whose hrefs AND anchor strings are closed
-    * forms of doc_id, exercising every [[graft.html.Links.innerText]]
+    * forms of doc_id, exercising every [[graft.html.InnerText]]
     * convention — a plain anchor, an anchor with a mid-word numeric
     * character reference + transparent inline tag + `<br>` separator +
     * embedded comment + whitespace collapse, an image-only anchor (empty

@@ -62,7 +62,8 @@ object ExtractPipeline {
     }
   }
 
-  /** Column-pruned, buffer-reusing extraction transform. */
+  /** Column-pruned, buffer-reusing extraction transform. A stateless
+    * narrow map, so it runs unchanged over a `readStream` source too. */
   def run(pages: Dataset[PageRow], delimiter: String = "",
       captureLines: Boolean = false): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession
@@ -101,15 +102,6 @@ object ExtractPipeline {
       }
   }
 
-  /** Streaming variant: the same stateless transform over a `readStream`
-    * source. Extraction is a narrow map, so it runs unchanged under
-    * Structured Streaming — continuous Common-Crawl ingest is
-    * `readStream → run → writeStream` with checkpointing giving
-    * exactly-once output (an alternative resumability story to the batch
-    * manifest in [[Checkpoint]]). */
-  def runStreaming(pages: Dataset[PageRow], delimiter: String = ""): Dataset[ExtractedDoc] =
-    run(pages, delimiter)
-
   /** Salted repartition against oversized-document skew: uniform hash salt,
     * `numPartitions` ≈ total cores (or a small multiple at high skew). At
     * cluster scale this is the difference between a stage tail of one task
@@ -119,17 +111,4 @@ object ExtractPipeline {
     // the expression value, so pre-bucketing it with pmod would funnel the
     // n salt values through a second hash and collide them
     pages.repartition(numPartitions, xxhash64(col("url")))
-
-  /** Size-aware routing (SURVEY §4 tactic c) in ONE scan and ONE shuffle:
-    * AQE's REBALANCE partitioning splits output partitions by BYTE SIZE
-    * (spark.sql.adaptive.optimizeSkewsInRebalancePartitions, on by
-    * default), so a handful of 50 MB PDFs get isolated toward one-doc-per-
-    * task while 1 KB pages coalesce to full partitions — without reading
-    * the input twice (the previous two-filtered-lanes design scanned the
-    * table once per lane) and staying deterministic under task retry
-    * (round-robin is not). `numPartitions`/`bigBytes` kept for API
-    * stability; AQE sizes the result itself. */
-  def sizeRouted(pages: Dataset[PageRow], numPartitions: Int,
-      bigBytes: Int = 4 << 20): Dataset[PageRow] =
-    pages.hint("rebalance", col("url")) // attribute, not expression: hint rule requirement
 }

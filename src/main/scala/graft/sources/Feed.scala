@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.html.{Entities, Tokenizer}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** RSS 2.0 / Atom 1.0 feed parser — the third crawl-discovery artifact
@@ -90,65 +91,21 @@ object Feed {
   }
 
   /** First `<link>` in [from, until) whose `rel` is absent or "alternate",
-    * returning its entity-decoded `href`. */
+    * returning its entity-decoded `href`. Attributes come from the HTML
+    * tokenizer's scanner (quote-aware, first-wins, unquoted values
+    * tolerated — real feeds don't validate) with the XML entity table. */
   private def atomLink(t: String, from: Int, until: Int): Option[String] = {
-    var i = Sitemap.indexOfElement(t, "link", from)
-    while (i >= 0 && i < until) {
-      val a = attrsOf(t, i)
+    var i = Sitemap.indexOfElement(t, "link", from, until)
+    while (i >= 0) {
+      val a = Tokenizer.attributes(t, Sitemap.elementNameEnd(t, i + 1), Entities.xml)
       val rel = a.getOrElse("rel", "alternate")
       val href = a.get("href")
       if (rel.equalsIgnoreCase("alternate") && href.exists(_.nonEmpty)) return href
-      i = Sitemap.indexOfElement(t, "link", i + 1)
+      i = Sitemap.indexOfElement(t, "link", i + 1, until)
     }
     None
   }
 
-  /** Quote-aware XML attribute scan of the tag opening at `tagStart`
-    * (XML requires quoted values, and a '>' INSIDE a quoted value must not
-    * terminate the tag). Names lowercased, values entity-decoded,
-    * first-wins. */
-  private[sources] def attrsOf(t: String, tagStart: Int): Map[String, String] = {
-    var out = Map.empty[String, String]
-    var i = Sitemap.elementNameEnd(t, tagStart + 1)
-    val n = t.length
-    def ws(c: Char) = c == ' ' || c == '\t' || c == '\n' || c == '\r'
-    while (i < n && t.charAt(i) != '>') {
-      while (i < n && (ws(t.charAt(i)) || t.charAt(i) == '/' || t.charAt(i) == '?')) i += 1
-      if (i < n && t.charAt(i) != '>') {
-        val nameStart = i
-        while (i < n && !ws(t.charAt(i)) && t.charAt(i) != '=' && t.charAt(i) != '>' &&
-            t.charAt(i) != '/') i += 1
-        val name = t.substring(nameStart, i).toLowerCase(java.util.Locale.ROOT)
-        while (i < n && ws(t.charAt(i))) i += 1
-        if (i < n && t.charAt(i) == '=') {
-          i += 1
-          while (i < n && ws(t.charAt(i))) i += 1
-          val value =
-            if (i < n && (t.charAt(i) == '"' || t.charAt(i) == '\'')) {
-              val q = t.charAt(i)
-              val vStart = i + 1
-              val vEnd = t.indexOf(q, vStart)
-              val end = if (vEnd < 0) n else vEnd
-              i = if (vEnd < 0) n else vEnd + 1
-              t.substring(vStart, end)
-            } else {
-              // unquoted value — invalid XML, but "real feeds don't
-              // validate" is this module's whole premise (Meta.attrs'
-              // HTML rule): read to whitespace or '>'
-              val vStart = i
-              while (i < n && !ws(t.charAt(i)) && t.charAt(i) != '>') i += 1
-              t.substring(vStart, i)
-            }
-          if (name.nonEmpty && !out.contains(name))
-            out = out.updated(name, Sitemap.decodeEntities(value))
-        } else if (name.nonEmpty && !out.contains(name)) out = out.updated(name, "")
-      }
-    }
-    out
-  }
-
-  /** [[Sitemap.elementText]] — the ONE copy of the element-text rules
-    * (decoy-skipping scan, quote-aware tag end, literal CDATA). */
   private def textOf(t: String, name: String, from: Int, until: Int): Option[String] =
     Sitemap.elementText(t, name, from, until)
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.html.{Entities, Tokenizer}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Sitemap protocol (sitemaps.org / RFC-less de-facto standard) — the
@@ -102,29 +103,13 @@ object Sitemap {
     } finally in.close()
   }
 
-  /** Index just after the '>' closing the tag that opens at `open` —
-    * QUOTE-AWARE: XML allows '>' inside quoted attribute values
-    * (`<title type="a>b">`), so a plain indexOf('>') would truncate the
-    * tag and leak the attribute tail into element text. */
-  private[sources] def tagEnd(t: String, open: Int): Int = {
-    var i = open + 1
-    var quote: Char = 0
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else if (c == '"' || c == '\'') quote = c
-      else if (c == '>') return i + 1
-      i += 1
-    }
-    t.length
-  }
-
-  /** First occurrence of `<name`/`<prefix:name` (element position), or -1. */
-  private[sources] def indexOfElement(t: String, name: String, from: Int): Int = {
+  /** First `<name`/`<prefix:name` (element position) in [from, until), or -1. */
+  private[sources] def indexOfElement(t: String, name: String, from: Int,
+      until: Int = Int.MaxValue): Int = {
     var i = from
     while (i >= 0) {
       i = t.indexOf('<', i)
-      if (i < 0) return -1
+      if (i < 0 || i >= until) return -1
       val s = i + 1
       val e = elementNameEnd(t, s)
       if (e > s && localName(t, s, e).equalsIgnoreCase(name)) return i
@@ -133,11 +118,13 @@ object Sitemap {
     -1
   }
 
-  private[sources] def indexOfClose(t: String, name: String, from: Int): Int = {
+  /** First `</name`/`</prefix:name` in [from, until), or -1. */
+  private[sources] def indexOfClose(t: String, name: String, from: Int,
+      until: Int = Int.MaxValue): Int = {
     var i = from
     while (i >= 0) {
       i = t.indexOf("</", i)
-      if (i < 0) return -1
+      if (i < 0 || i >= until) return -1
       val s = i + 2
       val e = elementNameEnd(t, s)
       if (e > s && localName(t, s, e).equalsIgnoreCase(name)) return i
@@ -156,70 +143,42 @@ object Sitemap {
     e
   }
 
+  /** The name in [s, e) after its last ':' — searched within the name
+    * only, never back into the rest of the file. */
   private[sources] def localName(t: String, s: Int, e: Int): String = {
-    val colon = t.lastIndexOf(':', e - 1)
-    if (colon >= s) t.substring(colon + 1, e) else t.substring(s, e)
+    var colon = e - 1
+    while (colon >= s && t.charAt(colon) != ':') colon -= 1
+    t.substring(colon + 1, e)
   }
 
   /** Trimmed text of the first `name` element inside [from, until) that
     * HAS text, or None. Scans past decoys instead of giving up on the
     * first local-name match — an item-level `<atom:link rel="self"/>`
     * before an RSS `<link>` (both local name "link") must not hide the
-    * real element. The closing '>' is found quote-aware ([[tagEnd]]);
+    * real element. The closing '>' is found by the HTML tokenizer's
+    * attribute scan (a '>' inside a quoted value does not end the tag);
     * self-closing elements have no text; CDATA content is literal (XML:
-    * no entity decoding inside CDATA), anything else entity-decodes. */
+    * no entity decoding inside CDATA), anything else decodes the five XML
+    * entities and numeric references. Every search stops at `until`, so a
+    * missing optional element costs its container, not the rest of the
+    * file. */
   private[sources] def elementText(t: String, name: String, from: Int, until: Int): Option[String] = {
-    var open = indexOfElement(t, name, from)
-    while (open >= 0 && open < until) {
-      val gt = tagEnd(t, open)
+    var open = indexOfElement(t, name, from, until)
+    while (open >= 0) {
+      val gt = Tokenizer.tagEnd(t, elementNameEnd(t, open + 1))
       if (gt > until) return None
       if (t.charAt(gt - 2) != '/') { // self-closing <x/>: no text, keep scanning
-        val close = indexOfClose(t, name, gt)
-        val stop = if (close < 0 || close > until) until else close
+        val close = indexOfClose(t, name, gt, until)
+        val stop = if (close < 0) until else close
         val body = t.substring(gt, stop).trim
         val v =
           if (body.startsWith("<![CDATA[") && body.endsWith("]]>"))
             body.substring(9, body.length - 3)
-          else decodeEntities(body)
+          else Entities.decode(body, Entities.xml)
         if (v.nonEmpty) return Some(v)
       }
-      open = indexOfElement(t, name, open + 1)
+      open = indexOfElement(t, name, open + 1, until)
     }
     None
-  }
-
-  /** The five XML predefined entities plus numeric references — sitemaps
-    * REQUIRE escaped ampersands in query-string URLs, so &amp; is the hot
-    * case. */
-  private[sources] def decodeEntities(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i + 1)
-        if (semi > i && semi - i <= 10) {
-          s.substring(i + 1, semi) match {
-            case "amp"  => sb.append('&'); i = semi + 1
-            case "lt"   => sb.append('<'); i = semi + 1
-            case "gt"   => sb.append('>'); i = semi + 1
-            case "quot" => sb.append('"'); i = semi + 1
-            case "apos" => sb.append('\''); i = semi + 1
-            case num if num.startsWith("#") =>
-              val cp = try {
-                if (num.startsWith("#x") || num.startsWith("#X"))
-                  Integer.parseInt(num.substring(2), 16)
-                else Integer.parseInt(num.substring(1))
-              } catch { case _: NumberFormatException => -1 }
-              if (cp >= 0 && Character.isValidCodePoint(cp)) {
-                sb.appendCodePoint(cp); i = semi + 1
-              } else { sb.append('&'); i += 1 }
-            case _ => sb.append('&'); i += 1
-          }
-        } else { sb.append('&'); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 }

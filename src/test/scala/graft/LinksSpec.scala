@@ -92,8 +92,8 @@ class LinksSpec extends AnyFunSuite {
     val got = Links.extractAnchors(
       """<a href="/t"> <b>bo&#108;d</b>-1 <br><!-- <a href="x">y</a> -->  tail </a>""", page)
     assert(got == Seq(("https://example.org/t", "bold-1 tail")))
-    // XHTML self-closing <br/> (tagName keeps the '/' in the name) still
-    // separates words — the no-space form is ubiquitous in real pages
+    // XHTML self-closing <br/> still separates words — the no-space form
+    // is ubiquitous in real pages
     assert(Links.extractAnchors("""<a href="/b">one<br/>two</a>""", page)
       == Seq(("https://example.org/b", "one two")))
     // image-only anchor keeps its (empty) text — the edge still exists

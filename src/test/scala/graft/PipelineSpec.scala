@@ -523,18 +523,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.select("url").distinct().count() == 6, "duplicate urls from orphan leak")
   }
 
-  test("sizeRouted: both lanes preserve rows and extraction is unchanged") {
-    import spark.implicits._
-    val tiny = (0L until 40L).map(i => Corpus.pageRowFor(i, s"small doc $i words", "en"))
-    val big = Seq(Corpus.pageRowFor(1000L, "huge " * 40000, "en")) // ~200 KB payload
-    val pages = (tiny ++ big).toDS()
-    val routed = ExtractPipeline.sizeRouted(pages, numPartitions = 4, bigBytes = 100 * 1024)
-    assert(routed.count() == 41)
-    val a = ExtractPipeline.run(routed).collect().map(d => d.url -> d.text).toMap
-    val b = ExtractPipeline.run(pages).collect().map(d => d.url -> d.text).toMap
-    assert(a == b)
-  }
-
   test("captureLines: pdf span source lines match the reference's CR/LF/CRLF rules") {
     import spark.implicits._
     val t = ("alpha beta gamma delta " * 40).trim // multi-page pdf (even id)
@@ -640,7 +628,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .schema(spark.read.parquet(s"$dir/in").schema)
       .parquet(s"$dir/in")
       .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow])
-    val q = ExtractPipeline.runStreaming(streamIn)
+    val q = ExtractPipeline.run(streamIn)
       .writeStream
       .outputMode("append")
       .format("memory")

@@ -70,4 +70,18 @@ class SitemapSpec extends AnyFunSuite {
     val p = Sitemap.parse(xml.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toOption.get
     assert(p.entries.map(_.loc) == Vector("https://a//p/q", "https://a/tail"))
   }
+
+  test("lastmod-less urlset: every entry, in order, none borrowing a later lastmod") {
+    val xml = "<urlset>" + (1 to 3).map(i => s"<url><loc>https://a/$i</loc></url>").mkString +
+      "<url><loc>https://a/4</loc><lastmod>2024-05-06</lastmod></url></urlset>"
+    assert(Sitemap.parse(xml.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toOption.get.entries ==
+      (1 to 3).map(i => Sitemap.Entry(s"https://a/$i", None)).toVector :+
+        Sitemap.Entry("https://a/4", Some("2024-05-06")))
+  }
+
+  test("only the five XML entities decode; numeric references need ASCII digits") {
+    val xml = "<urlset><url><loc>https://a/&eacute;&apos;&amp;&#47;&#+47;</loc></url></urlset>"
+    assert(Sitemap.parse(xml.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toOption.get
+      .entries.map(_.loc) == Vector("https://a/&eacute;'&/&#+47;"))
+  }
 }
