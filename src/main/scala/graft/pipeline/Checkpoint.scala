@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable runs with ATOMIC commits, modeling Iceberg snapshot semantics
@@ -24,9 +24,12 @@ import org.apache.spark.sql.functions._
   *    urls, so a re-submitted 10^12-row job re-reads only undone work.
   *
   * The north_rule's "checkpoints per-partition with lineage + metrics" maps
-  * to manifest rows (url, spark_partition_id, n_chars, decode_failures,
-  * batch) — enough to resume, attribute output to input splits, and roll up
-  * run metrics without re-reading the output table.
+  * to manifest rows (url, part_id, n_chars, decode_failures, batch) —
+  * enough to resume, attribute output to input splits, and roll up run
+  * metrics without re-reading the output table. `part_id` is the partition
+  * of the task that wrote the row, read from the `part-NNNNN` name of its
+  * data file; with no shuffle between extraction and write that is the
+  * extraction partition.
   */
 object Checkpoint {
 
@@ -63,31 +66,52 @@ object Checkpoint {
       throw new IllegalStateException(s"commit rename failed: $staging -> $target")
   }
 
-  /** Atomically commit a batch of extracted docs: stage data + manifest,
-    * rename data into place, then rename the manifest — the commit point.
-    * Returns the batch id. */
-  def commitWithData(done: Dataset[ExtractedDoc], outDir: String): String = {
-    val spark = done.sparkSession
+  /** Run rollup of one data commit, read from its staged files. `batch` is
+    * None when the batch was empty and nothing was published. */
+  final case class Committed(batch: Option[String], docs: Long, chars: Long,
+      decodeFailures: Long, pdfDocs: Long)
+
+  /** Atomically commit a batch of extracted docs. Returns its rollup; an
+    * empty batch publishes nothing. */
+  def commitWithData(done: Dataset[ExtractedDoc], outDir: String): Committed =
+    stageAndPublish(done.toDF(), outDir)(())
+
+  /** The one data-commit path, shared with [[compact]]: write `data` once to
+    * a fresh batch's staging dir, read the staged files back (url, n_chars,
+    * decode_failures, kind only) to write the manifest rows and observe the
+    * rollup in the same job, then publish the data, run `beforeCommit`, and
+    * publish the manifest — the commit point. An empty batch is dropped
+    * from staging instead. */
+  private def stageAndPublish(data: DataFrame, outDir: String)(beforeCommit: => Unit): Committed = {
+    val spark = data.sparkSession
     val batch = newBatchId()
     val dataStaging = s"${dataPath(outDir)}/.staging_$batch"
     val manStaging = s"${manifestPath(outDir)}/.staging_$batch"
-    // the data write and the manifest write are two jobs over `done`; pin it
-    // so (a) the (possibly expensive) upstream runs once and (b) a
-    // nondeterministic upstream cannot produce a manifest whose url set
-    // differs from the data actually written. Respect a caller's own cache.
-    val wasCached = done.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (!wasCached) done.persist()
-    try {
-      // data goes through the TableIO format seam (spark.graft.table.format);
-      // the manifest is engine bookkeeping and stays parquet
-      done.toDF().write.format(tableFormat(spark)).save(dataStaging)
-      manifestRows(done, batch).write.parquet(manStaging)
-    } finally {
-      if (!wasCached) done.unpersist()
+    // data goes through the TableIO format seam; the manifest is engine
+    // bookkeeping and stays parquet
+    data.write.format(TableIO.format(spark)).save(dataStaging)
+    val rollup = Observation()
+    spark.read.format(TableIO.format(spark)).schema(data.schema).load(dataStaging)
+      .observe(rollup, count(lit(1)).as("docs"),
+        coalesce(sum("n_chars"), lit(0L)).as("chars"),
+        coalesce(sum("decode_failures"), lit(0L)).as("decode_failures"),
+        count(when(col("kind") === "pdf", 1)).as("pdf_docs"))
+      .select(col("url"), col("n_chars"), col("decode_failures"),
+        regexp_extract(col("_metadata.file_name"), "^part-(\\d+)", 1).cast("int").as("part_id"),
+        lit(batch).as("batch"))
+      .write.parquet(manStaging)
+    val m = rollup.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    val published = m("docs") > 0
+    if (published) {
+      publish(spark, dataStaging, s"${dataPath(outDir)}/$batch")
+      beforeCommit
+      publish(spark, manStaging, s"${manifestPath(outDir)}/$batch")
+    } else {
+      val fs = fsOf(spark, outDir)
+      Seq(dataStaging, manStaging).foreach(d => fs.delete(new Path(d), true))
     }
-    publish(spark, dataStaging, s"${dataPath(outDir)}/$batch")
-    publish(spark, manStaging, s"${manifestPath(outDir)}/$batch")
-    batch
+    Committed(Some(batch).filter(_ => published), m("docs"), m("chars"),
+      m("decode_failures"), m("pdf_docs"))
   }
 
   /** Manifest-only commit (marks urls done without writing output data —
@@ -121,9 +145,6 @@ object Checkpoint {
   private def readManifests(spark: SparkSession, dirs: Seq[String]): DataFrame =
     // mergeSchema: legacy manifests lack the `batch` column
     spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-
-  private def tableFormat(spark: SparkSession): String =
-    spark.conf.get("spark.graft.table.format", "parquet")
 
   /** Rows of `pages` not yet present in any committed manifest. Left-anti on
     * `url`; the manifest side is small relative to the input and
@@ -179,7 +200,7 @@ object Checkpoint {
       }
     val batchDf =
       if (batches.isEmpty) None
-      else Some(spark.read.format(tableFormat(spark))
+      else Some(spark.read.format(TableIO.format(spark))
         .load(batches.map(b => s"${dataPath(outDir)}/$b"): _*))
     val legacyDf = if (legacyFiles.isEmpty) None else Some(spark.read.parquet(legacyFiles: _*))
     (batchDf, legacyDf) match {
@@ -348,14 +369,15 @@ object Checkpoint {
     * collapses (the replaced manifests are gone, so time travel spans only
     * commits after the last compaction — a filesystem sink without a
     * metadata log cannot keep rewritten lineage alive), and manifest
-    * `part_id` lineage is re-derived over the compacted layout (original
-    * extraction partition attribution does not survive). Manifest-only
-    * commits and the legacy flat layout are untouched. Returns the new
-    * batch id; None when < 2 data batches exist. */
+    * `part_id` lineage is re-derived over the compacted files: it is the
+    * partition of the compaction task that wrote the row, read from its
+    * data file name (original extraction partition attribution does not
+    * survive). Manifest-only commits and the legacy flat layout are
+    * untouched. Returns the new
+    * batch id; None when < 2 data batches exist or they hold no rows. */
   def compact(spark: SparkSession, outDir: String,
       targetFileBytes: Long = 128L << 20,
       lockStaleMs: Long = MaintenanceLockStaleMs): Option[String] = {
-    import spark.implicits._
     val mans = committedManifests(spark, outDir)
     val dataBatches = referencedBatches(spark, mans)
     if (dataBatches.size <= 1) return None
@@ -365,31 +387,24 @@ object Checkpoint {
       val totalBytes = dataDirs
         .map(d => fs.getContentSummary(new Path(d)).getLength).sum
       val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val batch = newBatchId()
-      val dataStaging = s"${dataPath(outDir)}/.staging_$batch"
-      val manStaging = s"${manifestPath(outDir)}/.staging_$batch"
-      val source = spark.read.format(tableFormat(spark)).load(dataDirs: _*)
+      val source = spark.read.format(TableIO.format(spark)).load(dataDirs: _*)
       // coalesce only shrinks; growing past the read parallelism (small
       // target on big input) needs a real repartition
       val sized =
         if (nFiles < source.rdd.getNumPartitions) source.coalesce(nFiles)
         else if (nFiles > source.rdd.getNumPartitions) source.repartition(nFiles)
         else source
-      sized.write.format(tableFormat(spark)).save(dataStaging)
-      // manifest rows re-derive from the compacted data: the url set equals
-      // the union of the replaced batches' data by construction
-      manifestRows(spark.read.format(tableFormat(spark)).load(dataStaging)
-        .as[ExtractedDoc], batch).write.parquet(manStaging)
-      publish(spark, dataStaging, s"${dataPath(outDir)}/$batch") // step 2
       // commitWithData names each manifest dir after its one data batch, so
       // the replaced manifests are exactly those named by a compacted batch
       // (manifest-only and legacy entries never carry such a name) — a pure
       // name check, no per-manifest read jobs
       val replaced = mans.filter(m => dataBatches.contains(new Path(m).getName))
-      replaced.foreach(m => fs.delete(new Path(m), true)) // step 3
-      publish(spark, manStaging, s"${manifestPath(outDir)}/$batch") // step 4
-      dataDirs.foreach(d => fs.delete(new Path(d), true)) // step 5
-      Some(batch)
+      // steps 1, 2 and 4; the manifest rows re-derive from the compacted
+      // files, whose url set is the replaced batches' by construction
+      val committed = stageAndPublish(sized, outDir)(
+        replaced.foreach(m => fs.delete(new Path(m), true))) // step 3
+      if (committed.batch.isDefined) dataDirs.foreach(d => fs.delete(new Path(d), true)) // step 5
+      committed.batch
     }
   }
 

@@ -3,7 +3,7 @@ package graft
 import graft.dedup.Dedup
 import graft.pipeline.{Checkpoint, Corpus, ExtractPipeline, PageRow}
 import graft.streaming.Events
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +26,28 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def sortedUrls(df: DataFrame): Seq[String] =
+    df.select("url").collect().map(_.getString(0)).sorted.toSeq
+
+  /** Urls vouched for by the committed data manifests (manifest-only
+    * commits carry an empty batch) must be exactly the table's urls. */
+  private def assertManifestMatchesTable(outDir: String): Unit =
+    assert(sortedUrls(spark.read.parquet(s"${Checkpoint.manifestPath(outDir)}/batch_*")
+      .where(col("batch") =!= "")) == sortedUrls(Checkpoint.readExtracted(spark, outDir)),
+      "manifest url set must equal the committed table's")
+
+  /** Commit `pages` salted over 6 partitions: every manifest row's part_id
+    * must be the partition its url was extracted in. */
+  private def commitSalted(pages: Dataset[PageRow], outDir: String): Unit = {
+    val salted = ExtractPipeline.salted(pages, 6)
+    val batch = Checkpoint.commitWithData(ExtractPipeline.run(salted), outDir).batch.get
+    def byUrl(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val want = byUrl(salted.select(col("url"), spark_partition_id()))
+    assert(want.values.toSet.size > 1, "the check needs more than one partition")
+    assert(byUrl(spark.read.parquet(s"${Checkpoint.manifestPath(outDir)}/$batch")
+      .select("url", "part_id")) == want)
+  }
 
   private def roundTrip(texts: Seq[(Long, String)]): Unit = {
     import spark.implicits._
@@ -124,7 +146,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = texts.map { case (id, t) => Corpus.pageRowFor(id, t, "en") }.toDS()
     def docId = element_at(split(col("url"), "/"), -1).cast("long")
     val outDir = java.nio.file.Files.createTempDirectory("graft_spec_atomic").toString
-    Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId < 4)), outDir)
+    commitSalted(pages.where(docId < 4), outDir)
     assert(Checkpoint.readExtracted(spark, outDir).count() == 4)
     // crash window between data rename and manifest rename: data batch
     // exists on disk but no manifest references it
@@ -138,6 +160,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.count() == 10)
     assert(out.select("url").distinct().count() == 10, "duplicate rows after crash-resume")
     assert(Checkpoint.resume(pages, outDir).count() == 0)
+    // a fully-resumed run's empty batch publishes nothing, staging included
+    def entries = Seq(Checkpoint.dataPath(outDir), Checkpoint.manifestPath(outDir))
+      .flatMap(d => new java.io.File(d).list()).sorted
+    val listed = entries
+    val empty = Checkpoint.commitWithData(ExtractPipeline.run(Checkpoint.resume(pages, outDir)), outDir)
+    assert(empty == Checkpoint.Committed(None, 0, 0, 0, 0))
+    assert(entries == listed, "an empty batch must leave no batch_ or .staging_ entry")
     // vacuum: the orphan is removable once past the grace window, but a
     // fresh (possibly in-flight) orphan inside it is protected
     assert(Checkpoint.vacuum(spark, outDir).isEmpty,
@@ -165,6 +194,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("url", "text", "n_chars").collect()
       .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
     val before = content()
+    assertManifestMatchesTable(outDir)
     def dataBatchDirs = new java.io.File(Checkpoint.dataPath(outDir))
       .listFiles.filter(f => f.isDirectory && f.getName.startsWith("batch_")).toSeq
     assert(dataBatchDirs.size == 3)
@@ -172,6 +202,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(newBatch.isDefined)
     assert(dataBatchDirs.map(_.getName) == Seq(newBatch.get), "exactly the compacted batch remains")
     assert(content() == before, "compaction must not change table content")
+    assertManifestMatchesTable(outDir)
     assert(!new java.io.File(Checkpoint.maintenanceLockPath(outDir)).exists,
       "maintenance lock must be released")
     assert(Checkpoint.resume(pages, outDir).count() == 0,
@@ -437,7 +468,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val outDir = java.nio.file.Files.createTempDirectory("graft_spec_orc").toString
     spark.conf.set("spark.graft.table.format", "orc")
     try {
-      Checkpoint.commitWithData(ExtractPipeline.run(pages.where(docId < 5)), outDir)
+      commitSalted(pages.where(docId < 5), outDir)
       assert(Checkpoint.readExtracted(spark, outDir).count() == 5)
       // data files really are ORC, not parquet
       val batchDirs = new java.io.File(Checkpoint.dataPath(outDir)).listFiles()
